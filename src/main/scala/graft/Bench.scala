@@ -1,11 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Headline-query benchmark (driver-run, one JSON line on stdout).
   *
-  * Measures the §2.5 headline queries (SparkEntry.benchKeys) at the
-  * scale factor in SPARK_GRAFT_SF_DIR. Each query gets two warm-up
+  * Usage: SPARK_GRAFT_SF_DIR=<sfDir> graft.Bench [entry ...]
+  *
+  * Measures the §2.5 headline queries (SparkEntry.benchKeys) and the
+  * LLM-pipeline ops (SparkEntry.opsBenchKeys) at the scale factor in
+  * SPARK_GRAFT_SF_DIR. Each query gets two warm-up
   * executions (JIT + codegen + file-listing warmup), then THREE
   * measured runs of which the MEDIAN is reported — single-run noise at
   * sf0.1 is ±0.3 s (~14% of the headline total), large enough to mask
@@ -33,17 +41,29 @@ import org.apache.spark.sql.SparkSession
   *     set: the numbers in that record reflect the environment, not
   *     the binary. The expected constant is overridable via
   *     SPARK_GRAFT_SENTINEL_SEC for non-sf0.1 runs.
+  *
+  * ENTRY ARGUMENTS: naming entries (any SparkEntry.queries key; an
+  * unknown name is rejected before Spark starts) times only those —
+  * headline keys under `queries`, every other key under `ops` — and
+  * adds two noise-immune plan-shape readings per entry to the verbose
+  * record: `jobs`, the Spark jobs one more noop-sink run launches
+  * (plan-time counts, checkpoints and collect-built broadcasts plus
+  * the write itself — deterministic, so a job-deleting change is
+  * verifiable in one run on any day), and `final_plan`, node counts
+  * of the POST-execution AQE plan. `.explain` before execution shows
+  * isFinalPlan=false and hides runtime stage reuse, so a claim that a
+  * twice-referenced subtree runs once needs the ReusedQueryStage /
+  * ReusedExchange counts of the executed plan.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
+    val unknown = args.filterNot(SparkEntry.queries.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[bench] unknown entries: ${unknown.mkString(", ")}")
+      sys.exit(2)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // sentinel expectation: per-SF calibration table (round 15,
-    // graft.Sentinel / BASELINE.md "Sentinel calibration") so octave
-    // records at any ScaleData dir self-bracket; the env var overrides,
-    // and a malformed override degrades to the table, not a
-    // NumberFormatException before Spark starts.
-    val sentinelExpected = Sentinel.expectedFor(sfDir)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -58,24 +78,66 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val (line, verbose) = run(spark, sfDir, args.toSeq)
+    // stop Spark BEFORE printing so the JSON line is the last stdout
+    // line of the run (shutdown logging lands above it, not after) —
+    // robust whether the driver scans lines or takes the last one.
+    // A throwing stop() must not lose the measurements already taken.
+    try spark.stop()
+    catch { case e: Throwable => System.err.println(s"[bench] spark.stop failed: $e") }
+    // Verbose record (per-run times for outlier forensics) goes to
+    // STDERR under a distinct metric name — stdout carries exactly ONE
+    // "metric":"total" record, so a consumer that takes the first match
+    // and one that takes the last agree.
+    System.err.println(verbose)
+    // … then a COMPACT medians-only record as the FINAL stdout line.
+    // The driver keeps only a bounded tail of stdout; through round 10
+    // the single verbose line overflowed that window and every
+    // BENCH_r*.json recorded `"parsed": null` with a mid-key fragment.
+    // The compact line (~1 KB at 33 queries: medians, sentinels, error
+    // keys — no per-run arrays) fits the window whole, so the driver
+    // parses it whether it takes the last line or scans from the end.
+    println(line)
+    System.out.flush()
+  }
+
+  /** Times `entries` (empty: every benchKeys and opsBenchKeys entry)
+    * on `spark` against `sfDir` and returns the compact stdout record
+    * and the verbose stderr record. Warnings (failed entries, degraded
+    * sentinels, spread suspects) go to stderr; the session is left
+    * running.
+    */
+  def run(spark: SparkSession, sfDir: String, entries: Seq[String] = Nil): (String, String) = {
+    // sentinel expectation: per-SF calibration table (round 15,
+    // graft.Sentinel / BASELINE.md "Sentinel calibration") so octave
+    // records at any ScaleData dir self-bracket; the env var overrides,
+    // and a malformed override degrades to the table, not a
+    // NumberFormatException.
+    val sentinelExpected = Sentinel.expectedFor(sfDir)
+    val (headlineKeys, opsKeys) =
+      if (entries.isEmpty) (SparkEntry.benchKeys, SparkEntry.opsBenchKeys)
+      else entries.partition(SparkEntry.benchKeys.contains)
 
     def materialize(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
 
-    def timeRuns(name: String): Either[String, Seq[Double]] =
-      try {
-        materialize(name) // warm-up 1: codegen, parquet footers, file index
-        materialize(name) // warm-up 2: C2-compile the generated code
-        Right(Seq.fill(3) {
-          val t0 = System.nanoTime()
-          materialize(name)
-          (System.nanoTime() - t0) / 1e9
-        })
-      } catch {
+    def attempt[T](body: => T): Either[String, T] =
+      try Right(body)
+      catch {
         case e: Throwable =>
           Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
       }
+
+    def timeRuns(name: String): Either[String, Seq[Double]] = attempt {
+      materialize(name) // warm-up 1: codegen, parquet footers, file index
+      materialize(name) // warm-up 2: C2-compile the generated code
+      Seq.fill(3) {
+        val t0 = System.nanoTime()
+        materialize(name)
+        (System.nanoTime() - t0) / 1e9
+      }
+    }
 
     // The sentinel plan: scan every lineitem column to the noop sink.
     // Deliberately NOT a SparkEntry entry — it must never change across
@@ -89,12 +151,23 @@ object Bench {
     sentinelOnce(); sentinelOnce() // warm-up (codegen + file listing)
 
     val sentinelStart = sentinelOnce()
-    val results = SparkEntry.benchKeys.map(name => name -> timeRuns(name))
+    val results = headlineKeys.map(name => name -> timeRuns(name))
     val sentinelMid = sentinelOnce()
     // LLM-pipeline ops, timed the same way but reported separately —
     // the headline total stays comparable to BASELINE.md's definition.
-    val opsResults = SparkEntry.opsBenchKeys.map(name => name -> timeRuns(name))
+    val opsResults = opsKeys.map(name => name -> timeRuns(name))
     val sentinelEnd = sentinelOnce()
+    // plan-shape readings for named entries, after every timed run so
+    // the job-counting listener never rides a measured one
+    val shapes = if (entries.isEmpty) Nil else {
+      val counter = new JobCounter(spark.sparkContext)
+      try entries.map { name =>
+        name -> attempt {
+          val jobs = counter.count(materialize(name))
+          (jobs, finalPlanCounts(SparkEntry.queries(name)(spark, sfDir)))
+        }
+      } finally counter.close()
+    }
     val sentinels = Seq(sentinelStart, sentinelMid, sentinelEnd)
     val degraded = sentinelExpected > 0 && sentinels.exists(_ > 2 * sentinelExpected)
     // SECOND taint signal (round 20): the r19 record passed the 2×
@@ -110,20 +183,12 @@ object Bench {
       case (k, Right(v)) if v.min > 0 && v.max / v.min > 3.0 => k
     }
 
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-
     def median(rs: Seq[Double]): Double = rs.sorted.apply(rs.size / 2)
     def jarr(rs: Seq[Double]): String = rs.mkString("[", ",", "]")
 
     val ok = results.collect { case (k, Right(v)) => k -> v }
     val opsOk = opsResults.collect { case (k, Right(v)) => k -> v }
-    val errs = (results ++ opsResults).collect { case (k, Left(m)) => k -> m }
+    val errs = (results ++ opsResults ++ shapes).collect { case (k, Left(m)) => k -> m }.distinctBy(_._1)
     // 4-decimal medians: 0.1 ms precision, and the compact record stays
     // well inside the driver's stdout tail window at 30+ queries.
     def jnum(d: Double): String = f"$d%.4f"
@@ -139,35 +204,85 @@ object Bench {
     if (spreadSuspect.nonEmpty) System.err.println(
       s"[bench] SPREAD SUSPECT (within-entry max/min > 3x — mid-entry environment " +
         s"stall even though sentinels pass): ${spreadSuspect.mkString(", ")}")
-    // stop Spark BEFORE printing so the JSON line is the last stdout
-    // line of the run (shutdown logging lands above it, not after) —
-    // robust whether the driver scans lines or takes the last one.
-    // A throwing stop() must not lose the measurements already taken.
-    try spark.stop()
-    catch { case e: Throwable => System.err.println(s"[bench] spark.stop failed: $e") }
-    // Verbose record (per-run times for outlier forensics) goes to
-    // STDERR under a distinct metric name — stdout carries exactly ONE
-    // "metric":"total" record, so a consumer that takes the first match
-    // and one that takes the last agree.
     val spreadJson = spreadSuspect.map(jstr).mkString("[", ",", "]")
-    System.err.println(
-      s"""{"metric":"total_verbose","value":$total,"unit":"sec","queries":$qs,"ops":$os,"runs":$runs,""" +
+    val shapesOk = shapes.collect { case (k, Right(v)) => k -> v }
+    val shapeJson =
+      if (entries.isEmpty) ""
+      else shapesOk.map { case (k, (j, _)) => s"${jstr(k)}:$j" }.mkString(""""jobs":{""", ",", "},") +
+        shapesOk.map { case (k, (_, p)) => s"${jstr(k)}:$p" }.mkString(""""final_plan":{""", ",", "},")
+    val verbose =
+      s"""{"metric":"total_verbose","value":$total,"unit":"sec","queries":$qs,"ops":$os,"runs":$runs,$shapeJson""" +
         s""""sentinel":${jarr(sentinels)},"sentinel_expected":$sentinelExpected,"degraded":$degraded,""" +
         s""""spread_suspect":$spreadJson,"errors":$es,"sf":${jstr(sfDir)}}"""
-    )
-    // … then a COMPACT medians-only record as the FINAL stdout line.
-    // The driver keeps only a bounded tail of stdout; through round 10
-    // the single verbose line overflowed that window and every
-    // BENCH_r*.json recorded `"parsed": null` with a mid-key fragment.
-    // The compact line (~1 KB at 33 queries: medians, sentinels, error
-    // keys — no per-run arrays) fits the window whole, so the driver
-    // parses it whether it takes the last line or scans from the end.
-    println(
+    val line =
       s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":$qs,"ops":$os,""" +
         s""""sentinel":${sentinels.map(jnum).mkString("[", ",", "]")},""" +
         s""""sentinel_expected":$sentinelExpected,"degraded":$degraded,""" +
         s""""spread_suspect":$spreadJson,"errors":$es,"sf":${jstr(sfDir)}}"""
-    )
-    System.out.flush()
+    (line, verbose)
+  }
+
+  private def jstr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+
+  /** Executes `df`'s own QueryExecution (a noop write would plan a new
+    * one and leave this plan unexecuted) without collecting rows to the
+    * driver, then counts node names in the finalized plan's string —
+    * which for AQE lists the final AND the initial plan, so a count
+    * covers both.
+    */
+  private def finalPlanCounts(df: DataFrame): String = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("bench final plan")) {
+      qe.executedPlan.execute().foreach(_ => ())
+    }
+    val p = qe.executedPlan.toString
+    Seq(
+      "ReusedQueryStage" -> "ReusedQueryStage", "ReusedExchange" -> "ReusedExchange",
+      "Exchange" -> "Exchange", "scans" -> "Scan parquet", "smj" -> "SortMergeJoin",
+      "shj" -> "ShuffledHashJoin", "bhj" -> "BroadcastHashJoin", "sortAgg" -> "SortAggregate"
+    ).map { case (k, pat) => s"${jstr(k)}:${pat.r.findAllIn(p).length}" }.mkString("{", ",", "}")
+  }
+
+  /** Counts the jobs a body launches. Listener events arrive
+    * asynchronously, so each side of the body is fenced by a marker job
+    * whose start event the bus delivers after everything posted before
+    * it; marker jobs themselves are not counted.
+    */
+  private final class JobCounter(sc: SparkContext) extends SparkListener {
+    private val Marker = "graft.bench.marker"
+    private val started = new AtomicInteger(0)
+    @volatile private var lastMarker: String = null
+    sc.addSparkListener(this)
+
+    override def onJobStart(js: SparkListenerJobStart): Unit =
+      Option(js.properties).flatMap(p => Option(p.getProperty(Marker))) match {
+        case Some(m) => lastMarker = m
+        case None    => started.incrementAndGet()
+      }
+
+    private def drain(): Unit = {
+      val m = java.util.UUID.randomUUID().toString
+      sc.setLocalProperty(Marker, m)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(Marker, null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (lastMarker != m && System.nanoTime() < deadline) Thread.sleep(5)
+    }
+
+    def count(body: => Unit): Int = {
+      drain()
+      val before = started.get()
+      body
+      drain()
+      started.get() - before
+    }
+
+    def close(): Unit = sc.removeSparkListener(this)
   }
 }

@@ -27,7 +27,7 @@ import org.apache.spark.sql.SparkSession
   *     **Size `bloomCreationCap` BETWEEN the pruned join columns of
   *     your largest dimension and your smallest fact table.** The cap
   *     is the knob that decides WHICH side's bloom fires, and an
-  *     over-generous one is actively harmful: ProfileProbe at sf10
+  *     over-generous one is actively harmful: a probe run at sf10
   *     (BASELINE r19) measured that a cap admitting the fact side
   *     (lineitem's pruned l_orderkey+l_shipdate estimate fits under
   *     400 MB at that scale) makes Spark spend the one orders-side

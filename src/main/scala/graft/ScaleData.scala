@@ -11,7 +11,7 @@ import graft.sources.Tables
   * scan parallelism (the driver's single-file tables are one row group
   * each, so a headline scan is structurally single-threaded).
   *
-  * Scaling shapes (the realistic growth axes, same as MicroBench):
+  * Scaling shapes (the realistic growth axes):
   *   - dimensions (`region`, `nation`) are copied as-is;
   *   - fact tables shift their keys per replica, so FK joins stay
   *     consistent and cardinalities grow linearly (10× orders with the

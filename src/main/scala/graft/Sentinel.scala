@@ -1,7 +1,7 @@
 package graft
 
 /** Per-scale expected values for the measurement SENTINEL — the full
-  * lineitem scan to a noop sink that Bench and MicroBench time around
+  * lineitem scan to a noop sink that Bench times around
   * every record so a degraded environment (this VM's
   * memory-compaction stalls) marks its own numbers suspect.
   *

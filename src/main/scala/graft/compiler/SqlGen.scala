@@ -751,7 +751,9 @@ private[graft] final class SqlGen(
     * SQL dialect cannot carry; results are bit-identical by
     * construction — AsOf.scala's bucket passes reproduce the exact
     * single-window order). Validation is shared with the DataFrame
-    * path via [[ExtJoins]].
+    * path via [[ExtJoins]]. Right rows with a NULL key or timestamp
+    * are dropped before the union, as in the library op: they match
+    * nothing, not even a left row whose key is also NULL.
     */
   private def applyAsofJoin(prev: Stage, op: AsofJoinOp): Stage = {
     val right = foldOps(sourceStage(op.right.source), op.right.operators)
@@ -776,7 +778,7 @@ private[graft] final class SqlGen(
     val u = newStage(
       s"SELECT ${leftCols.map(q).mkString(", ")}, CAST(NULL AS ${valsType.sql}) AS __vals, 1 AS __side FROM ${prev.cte}" +
         s"\n  UNION ALL SELECT ${rightSelect.mkString(", ")}, $namedStruct AS __vals, 0 AS __side" +
-        s" FROM ${right.cte} WHERE ${q(p.ts)} IS NOT NULL")
+        s" FROM ${right.cte} WHERE ${(p.ts +: p.keys).map(c => s"${q(c)} IS NOT NULL").mkString(" AND ")}")
     val win = s"PARTITION BY ${p.keys.map(q).mkString(", ")} ORDER BY ${q(p.ts)} ASC, __side ASC" +
       " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
     val f = newStage(

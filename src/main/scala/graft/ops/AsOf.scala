@@ -37,7 +37,8 @@ object AsOf {
   /** Join each left row to the most recent right row with
     * `right.tsCol <= left.tsCol` on the same `keyCols`. Left rows with
     * no prior right row keep NULL value columns (left-outer
-    * semantics). `right` must carry exactly `keyCols :+ tsCol :+
+    * semantics). Right rows with a NULL key or a NULL timestamp match
+    * nothing. `right` must carry exactly `keyCols :+ tsCol :+
     * valueCols` and be unique per (key, ts) — pre-aggregate if not.
     *
     * `timeBuckets` bounds per-task work under key skew (see class
@@ -164,12 +165,12 @@ object AsOf {
 
     // The right side is bucketed and hash-partitioned ONCE, and both
     // consumers — the union branch and the pass-2 carry summary —
-    // read this single exchange (round 20, `MicroBench asofab`).
+    // read this single exchange (round 20).
     // Left lazy, the right subtree was computed TWICE from source:
     // InferFiltersFromConstraints pushes an isnotnull(key) into the
     // summary branch only (the carry join's right side), so the two
     // copies never canonicalize equal and neither ReuseExchange nor
-    // AQE stage reuse ever fired (finalplan: 0 ReusedQueryStage).
+    // AQE stage reuse ever fired (final plan: 0 ReusedQueryStage).
     // The repartition is not an added cost: the summary aggregates
     // IN PLACE on its partitioning (the (key, bucket) exchange the
     // old summary aggregate paid for itself disappears), so the

@@ -14,10 +14,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * For each workload it prints ONE JSON line with the max state rows /
   * state memory bytes across all micro-batches, total input/output
-  * rows, and batch count. The claim under test: **state is bounded by
-  * the watermark**, i.e. max state rows tracks the distinct keys
-  * inside one lateness window, NOT the total keys in the run —
-  * recorded in BASELINE.md.
+  * rows, batch count, and `wall_s` — seconds from query start through
+  * the drained, stopped query (one micro-batch per file, state
+  * accumulating across batches as in production). The claim under
+  * test: **state is bounded by the watermark**, i.e. max state rows
+  * tracks the distinct keys inside one lateness window, NOT the total
+  * keys in the run — recorded in BASELINE.md.
   *
   * Usage: sbt "runMain graft.streaming.Soak <sfDir> [nFiles] [workloads]"
   * where [workloads] is an optional comma-list restricting the run
@@ -84,9 +86,11 @@ object Soak {
 
     // ---- soak runner: drain the stream, track state highwater ------
     def soak(name: String, outPath: String)(start: () => StreamingQuery): Unit = {
+      val t0 = System.nanoTime()
       val q = start()
       try q.processAllAvailable()
       finally q.stop()
+      val wallS = (System.nanoTime() - t0) / 1e9
       // recentProgress is capped at 100 entries; nFiles stays far below
       val progress = q.recentProgress.toSeq
       val states = progress.flatMap(_.stateOperators.toSeq)
@@ -97,7 +101,8 @@ object Soak {
       val outRows = spark.read.parquet(outPath).count()
       println(
         s"""{"soak":"$name","batches":${progress.size},"input_rows":$inRows,""" +
-          s""""output_rows":$outRows,"max_state_rows":$maxRows,"max_state_bytes":$maxMem}""")
+          s""""output_rows":$outRows,"max_state_rows":$maxRows,"max_state_bytes":$maxMem,""" +
+          f""""wall_s":$wallS%.3f}""")
     }
 
     // 1. windowed agg → parquet file sink (events_windowed_fsink shape)

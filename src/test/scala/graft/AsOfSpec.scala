@@ -79,6 +79,14 @@ class AsOfSpec extends SparkTestBase {
       assert(out(100L) == Some(10.0), s"buckets=$buckets")
       assert(out.size == tradesN.count())
     }
+    // the SQL-text backend drops the same right rows as the plan path
+    tradesN.createOrReplaceTempView("AsofNullTrades")
+    qs.createOrReplaceTempView("AsofNullQuotes")
+    val cat = Map("AsofNullTrades" -> tradesN, "AsofNullQuotes" -> qs)
+    val q = "AsofNullTrades | join kind=asof (AsofNullQuotes) on sym, ts | project trade_id, px"
+    val viaSql = spark.sql(Pql.compileToSql(q, cat)).as[(Long, Option[Double])].collect().toMap
+    assert(viaSql(400L).isEmpty, "SQL text: null-key left row matched a null-key right row")
+    assert(viaSql == Pql.query(spark, q, cat).as[(Long, Option[Double])].collect().toMap)
   }
 
   test("multi-value fill takes the whole matched row, even when a value is NULL") {

@@ -458,11 +458,12 @@ class OpsSpec extends SparkTestBase {
   }
 
   test("KMV sketch tokenizes the corpus ONCE: exact and sketch sides reuse one exchange (round 20)") {
-    // both outputs hang off the same groupBy(h).agg(countDistinct(tok))
-    // frame; the guarded max keeps the optimizer from specializing the
-    // sketch side (see Sketch.scala). At runtime AQE must reuse the
-    // corpus-scale shuffle — the executed plan carries a reused stage
-    // and only ONE Generate (tokenize) executes.
+    // both outputs hang off the same vocabulary frame (distinct tokens,
+    // then groupBy(h).agg(count(1))); the guarded max keeps the
+    // optimizer from specializing the sketch side (see Sketch.scala).
+    // At runtime AQE must reuse the corpus-scale shuffle — the executed
+    // plan carries a reused stage and only ONE Generate (tokenize)
+    // executes.
     val dir = java.nio.file.Files.createTempDirectory("graft_kmv_plan").toString
     (0L until 20000L).map(i => (i, s"tok${i % 5000}")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(dir)
@@ -1068,6 +1069,17 @@ class OpsSpec extends SparkTestBase {
       assert(!plan.contains("CartesianProduct"), s"cartesian product in:\n$plan")
       assert(!plan.contains("BroadcastNestedLoopJoin"), s"nested loop join in:\n$plan")
     }
+  }
+
+  test("simhash pairs plan has no repartition: the band self-join recomputes the signatures") {
+    // A repartition(band) reuse point computes the md5 SimhashSig loop
+    // once, but it wins only at sf0.1 and loses ~25% at sf1, where AQE
+    // broadcasts one band side instead of shuffling both (r20 A/B).
+    val plan = NearDup.simhashPairs(docs, "text", "doc_id").queryExecution.analyzed
+    val reparts = plan.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionOperation => r
+    }
+    assert(reparts.isEmpty, s"repartition in simhashPairs:\n$plan")
   }
 
   test("LSH candidate joins stay equi-joins at band edge cases (bandRows/bandBits don't divide k/planes)") {
